@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hipipe_spark.operators.temporal import DEFAULT_ORDER
 
 _STATS_UNKNOWN = 1 << 61
 
@@ -310,6 +311,21 @@ def asof_interpolate(
     return out.select(*[F.col(c) for c in lcols], *proj)
 
 
+def _tag_union(left, right, on, by, value_cols, exact):
+    """Left rows plus right rows in one frame: the right's values ride in
+    ``__r_<col>``, NULL on left rows, and the left's other columns are
+    NULL on right rows. ``__side`` is 1 on left rows; right rows must
+    sort BEFORE left rows at equal ``on`` when exact matches are allowed
+    (so last() sees them), AFTER when not."""
+    l = left.withColumn("__side", F.lit(1))
+    r = right.select(
+        on, *by,
+        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
+        F.lit(0 if exact else 2).alias("__side"),
+    )
+    return l.unionByName(r, allowMissingColumns=True)
+
+
 def _asof_union(left, right, on, by, direction, exact, tol, value_cols, suffix):
     if direction == "nearest":
         return _asof_union_nearest(left, right, on, by, exact, tol,
@@ -317,39 +333,33 @@ def _asof_union(left, right, on, by, direction, exact, tol, value_cols, suffix):
     if direction not in ("backward", "forward"):
         raise ValueError(direction)
     lcols = left.columns
-    # Tag: right rows must sort BEFORE left rows at equal ts when exact
-    # matches are allowed (so last() sees them), AFTER when not.
-    right_tag = 0 if exact else 2
-    l = left.select(
-        *[F.col(c) for c in lcols],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in value_cols],
-        F.lit(1).alias("__side"),
-    )
-    r = right.select(
-        *[
-            (F.col(c) if c in {on, *by} else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-            for c in lcols
-        ],
-        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
-        F.lit(right_tag).alias("__side"),
-    )
-    u = l.unionByName(r)
-    order = [F.col(on), F.col("__side")]
+    u = _tag_union(left, right, on, by, value_cols, exact)
+    order = [on, "__side"]
     if direction == "forward":
-        order = [F.col(on).desc(), F.col("__side")]
+        order = [F.col(on).desc(), "__side"]
+    elif exact:
+        # Ties on `on` first sort by the engine's stable order column
+        # (turn_idx) when the left side has it. Right rows carry NULL
+        # there, which sorts first, and the side tag still settles a
+        # NULL on the left, so every match is unchanged; a following
+        # (by; ts, turn_idx) window (every temporal stage) then reuses
+        # this sort instead of sorting again.
+        stable = [c for c in DEFAULT_ORDER if c in lcols and c not in {on, *by}]
+        order = [on, *stable, "__side"]
     w = (
         Window.partitionBy(*by)
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = [
-        F.last(F.col(f"__r_{c}"), ignorenulls=True).over(w).alias(f"__f_{c}")
+        F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"__f_{c}")
         for c in value_cols
     ]
-    matched_ts = F.last(
-        F.when(F.col("__side") != 1, F.col(on)), ignorenulls=True
-    ).over(w).alias("__match_ts")
-    out = u.select("*", *filled, matched_ts).filter(F.col("__side") == 1)
+    if tol is not None:
+        filled.append(F.last(
+            F.when(F.col("__side") != 1, F.col(on)), ignorenulls=True
+        ).over(w).alias("__match_ts"))
+    out = u.select("*", *filled).filter(F.col("__side") == 1)
     if tol is not None:
         delta = F.abs(_epoch_sec(F.col(on)) - _epoch_sec(F.col("__match_ts")))
         within = F.col("__match_ts").isNotNull() & (delta <= tol)
@@ -358,7 +368,7 @@ def _asof_union(left, right, on, by, direction, exact, tol, value_cols, suffix):
         ]
     else:
         proj = [F.col(f"__f_{c}").alias(f"{c}{suffix}") for c in value_cols]
-    return out.select(*[F.col(c) for c in lcols], *proj)
+    return out.select(*lcols, *proj)
 
 
 def _asof_union_nearest(left, right, on, by, exact, tol, value_cols, suffix):
@@ -368,21 +378,7 @@ def _asof_union_nearest(left, right, on, by, exact, tol, value_cols, suffix):
     each direction's candidate first, then the closer one wins; ties
     prefer backward (``pd.merge_asof`` behavior)."""
     lcols = left.columns
-    right_tag = 0 if exact else 2
-    l = left.select(
-        *[F.col(c) for c in lcols],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in value_cols],
-        F.lit(1).alias("__side"),
-    )
-    r = right.select(
-        *[
-            (F.col(c) if c in {on, *by} else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-            for c in lcols
-        ],
-        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
-        F.lit(right_tag).alias("__side"),
-    )
-    u = l.unionByName(r)
+    u = _tag_union(left, right, on, by, value_cols, exact)
     wb = (Window.partitionBy(*by).orderBy(F.col(on), F.col("__side"))
           .rowsBetween(Window.unboundedPreceding, 0))
     wf = (Window.partitionBy(*by).orderBy(F.col(on).desc(), F.col("__side"))
@@ -410,7 +406,7 @@ def _asof_union_nearest(left, right, on, by, exact, tol, value_cols, suffix):
         .alias(f"{c}{suffix}")
         for c in value_cols
     ]
-    return out.select(*[F.col(c) for c in lcols], *proj)
+    return out.select(*lcols, *proj)
 
 
 # one cogroup (left rows + right rows for a key set) must fit a python

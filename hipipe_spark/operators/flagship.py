@@ -6,6 +6,13 @@ assistant-turn count over the last 10 turns, backfilled last tool, and
 the as-of-joined conversation profile (model/temperature at turn time).
 Zero temporal leakage: every feature reads only rows with
 (ts, turn_idx) ≤ current (leads are labels, suffixed ``_label``).
+
+Plan shape: the as-of join runs first, on the turns, so its union shares
+one ``hashpartitioning(conv_id)`` exchange and one sort with every
+temporal window; the temporal stages then fuse into two window passes
+(every lag, rolling frame and backfill in one, Sessionize's running sum
+in the other). With the union as-of: one exchange, one sort, three
+Window operators.
 """
 
 from __future__ import annotations
@@ -15,7 +22,7 @@ from pyspark.sql import functions as F
 
 from hipipe_spark.operators.asof import asof_join
 from hipipe_spark.operators.temporal import (
-    Backfill, FrameSpec, LagLead, RollingAgg, Sessionize, TimeSincePrev,
+    Backfill, LagLead, RollingAgg, Sessionize, TimeSincePrev,
 )
 from hipipe_spark.plans.pipeline import Pipeline
 
@@ -45,11 +52,16 @@ def featurize(turns: DataFrame, profiles: DataFrame | None = None,
               payload: str = "inline") -> DataFrame:
     """Run the flagship pipeline; optionally as-of join profiles.
 
-    ``asof_strategy="auto"`` broadcasts the packed profile side when it
-    is small (one struct-array per conversation) so the wide feature
-    output is never re-shuffled — the whole pipeline then needs exactly
-    ONE exchange of the fact table; large profile sides fall back to
-    the union+window strategy (second shuffle, but no size limit).
+    The as-of join runs before the feature windows, on the turns. With
+    ``asof_strategy="union"`` (no size limit) the union of turns and
+    profile rows is the one ``conv_id`` exchange of the whole pipeline:
+    the filter back to turn rows keeps its partitioning and sort order,
+    so the feature windows neither shuffle nor sort again.
+    ``"auto"`` broadcasts the packed profile side when it is small (one
+    struct-array per conversation) and falls back to ``"union"`` for
+    large profile sides; both need exactly ONE exchange of the fact
+    table. Output columns are the same whatever the strategy: the input
+    columns, ``text_len``, the features, then the ``*_asof`` columns.
 
     ``payload`` picks how wide columns travel. ``"inline"`` (default):
     one lineage, one exchange, payload rows ride through the window
@@ -67,11 +79,15 @@ def featurize(turns: DataFrame, profiles: DataFrame | None = None,
     wide_extra = [c for c in df.columns if c not in narrow_cols]
 
     def run(d):
-        d = feature_pipeline(gap)(d)
-        if profiles is not None:
-            d = asof_join(d, profiles, on="ts", by="conv_id",
-                          strategy=asof_strategy, suffix="_asof")
-        return d
+        if profiles is None:
+            return feature_pipeline(gap)(d)
+        # as-of first: its conv_id exchange is the one the windows reuse
+        joined = asof_join(d, profiles, on="ts", by="conv_id",
+                           strategy=asof_strategy, suffix="_asof")
+        asof_cols = joined.columns[len(d.columns):]
+        out = feature_pipeline(gap)(joined)
+        return out.select(*[c for c in out.columns if c not in asof_cols],
+                          *asof_cols)
 
     if not wide_extra or payload == "inline":
         return run(df)

@@ -17,6 +17,11 @@ read ``ts' > ts``. Features needing strictly-past data end at ``-1``.
 
 All operators are pure built-in ``pyspark.sql.functions`` — JVM-side,
 whole-stage-codegen'd, no Python in the hot path.
+
+Sessionize, TimeSincePrev, LagLead, RollingAgg and Backfill are
+:class:`~hipipe_spark.plans.pipeline.WindowStage` s: in a ``Pipeline``
+they fuse into one window pass per dependency layer (every lag, rolling
+frame and backfill in the first, Sessionize's running sum in the second).
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from hipipe_spark.plans.pipeline import Stage
+from hipipe_spark.plans.pipeline import Layers, Stage, WindowStage
 
 DEFAULT_KEY = "conv_id"
 DEFAULT_ORDER = ("ts", "turn_idx")
@@ -74,21 +79,36 @@ class FrameSpec:
 
     def over(self, key: str | Sequence[str] = DEFAULT_KEY,
              order: Sequence[str] = DEFAULT_ORDER) -> WindowSpec:
-        keys = [key] if isinstance(key, str) else list(key)
-        return (
-            Window.partitionBy(*keys)
-            .orderBy(*[F.col(c) for c in order])
-            .rowsBetween(self.start, self.end)
-        )
+        return ordered_window(key, order).rowsBetween(self.start, self.end)
 
 
 def ordered_window(key: str | Sequence[str] = DEFAULT_KEY,
                    order: Sequence[str] = DEFAULT_ORDER) -> WindowSpec:
     keys = [key] if isinstance(key, str) else list(key)
-    return Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order])
+    return Window.partitionBy(*keys).orderBy(*order)
 
 
-class Sessionize(Stage):
+def _lag_name(col: str, k: int = 1) -> str:
+    """Scratch name of ``lag(col, k)`` under a stage's window spec, shared
+    by every fused stage that reads the previous row's ``col``."""
+    return f"__lag_{k}_{col}"
+
+
+class _KeyedWindowStage(WindowStage):
+    """A window stage over ``partitionBy(key) orderBy(order)``."""
+
+    def __init__(self, name: str, key: str | Sequence[str],
+                 order: Sequence[str]):
+        super().__init__(name)
+        self.key, self.order = key, order
+        keys = (key,) if isinstance(key, str) else tuple(key)
+        self.spec = (keys, tuple(order))
+
+    def window(self) -> WindowSpec:
+        return ordered_window(self.key, self.order)
+
+
+class Sessionize(_KeyedWindowStage):
     """Gap-based sessionization: a new session starts when the time since
     the previous turn exceeds ``gap``. Emits ``session_id`` (string,
     ``<conv_id>#<n>``) and ``session_seq`` (int, 0-based within conv).
@@ -102,28 +122,30 @@ class Sessionize(Stage):
 
     def __init__(self, gap: str = "30 minutes", key: str = DEFAULT_KEY,
                  ts_col: str = "ts", order: Sequence[str] = DEFAULT_ORDER):
-        super().__init__(f"sessionize({gap})")
+        super().__init__(f"sessionize({gap})", key, order)
         self.gap_sec = _interval_seconds(gap)
-        self.key, self.ts_col, self.order = key, ts_col, order
+        self.ts_col = ts_col
+        self.outputs = ["session_seq", "session_id"]
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        w = ordered_window(self.key, self.order)
-        prev_ts = F.lag(F.col(self.ts_col)).over(w)
+    def layers(self) -> Layers:
+        w = self.window()
+        prev_name = _lag_name(self.ts_col)
+        prev_ts = F.col(prev_name)
         # epoch double keeps sub-second precision (unix_timestamp truncates)
         gap = ts_seconds(F.col(self.ts_col)) - ts_seconds(prev_ts)
         new_sess = F.when(
             prev_ts.isNull() | (gap > float(self.gap_sec)), F.lit(1)
         ).otherwise(F.lit(0))
-        df = df.withColumn(
-            "session_seq",
-            (F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1).cast("int"),
-        )
-        return df.withColumn(
-            "session_id", F.concat(F.col(self.key), F.lit("#"), F.col("session_seq"))
-        )
+        running = w.rowsBetween(Window.unboundedPreceding, 0)
+        return [
+            {prev_name: F.lag(F.col(self.ts_col)).over(w)},
+            {"session_seq": (F.sum(new_sess).over(running) - 1).cast("int")},
+            {"session_id": F.concat(F.col(self.key), F.lit("#"),
+                                    F.col("session_seq"))},
+        ]
 
 
-class LagLead(Stage):
+class LagLead(_KeyedWindowStage):
     """lag/lead features over the stable per-conversation order.
 
     ``LagLead("role", lags=[1,2])`` → ``role_lag_1``, ``role_lag_2``.
@@ -135,38 +157,44 @@ class LagLead(Stage):
                  leads: Sequence[int] = (), key: str = DEFAULT_KEY,
                  order: Sequence[str] = DEFAULT_ORDER):
         self.cols = [cols] if isinstance(cols, str) else list(cols)
-        super().__init__(f"lag_lead({','.join(self.cols)})")
+        super().__init__(f"lag_lead({','.join(self.cols)})", key, order)
         self.lags, self.leads = list(lags), list(leads)
-        self.key, self.order = key, order
+        self.outputs = [
+            name for c in self.cols
+            for name in [f"{c}_lag_{k}" for k in self.lags]
+            + [f"{c}_lead_{k}_label" for k in self.leads]
+        ]
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        w = ordered_window(self.key, self.order)
+    def layers(self) -> Layers:
+        w = self.window()
+        cols = {}
         for c in self.cols:
             for k in self.lags:
-                df = df.withColumn(f"{c}_lag_{k}", F.lag(c, k).over(w))
+                cols[f"{c}_lag_{k}"] = F.lag(c, k).over(w)
             for k in self.leads:
-                df = df.withColumn(f"{c}_lead_{k}_label", F.lead(c, k).over(w))
-        return df
+                cols[f"{c}_lead_{k}_label"] = F.lead(c, k).over(w)
+        return [cols]
 
 
-class TimeSincePrev(Stage):
+class TimeSincePrev(_KeyedWindowStage):
     """Seconds since the previous turn (null on the first turn)."""
 
     def __init__(self, ts_col: str = "ts", out: str = "secs_since_prev",
                  key: str = DEFAULT_KEY, order: Sequence[str] = DEFAULT_ORDER):
-        super().__init__("time_since_prev")
-        self.ts_col, self.out, self.key, self.order = ts_col, out, key, order
+        super().__init__("time_since_prev", key, order)
+        self.ts_col, self.out = ts_col, out
+        self.outputs = [out]
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        w = ordered_window(self.key, self.order)
-        prev = F.lag(F.col(self.ts_col)).over(w)
-        return df.withColumn(
-            self.out,
-            F.round(ts_seconds(F.col(self.ts_col)) - ts_seconds(prev), 6),
-        )
+    def layers(self) -> Layers:
+        prev_name = _lag_name(self.ts_col)
+        since = ts_seconds(F.col(self.ts_col)) - ts_seconds(F.col(prev_name))
+        return [
+            {prev_name: F.lag(F.col(self.ts_col)).over(self.window())},
+            {self.out: F.round(since, 6)},
+        ]
 
 
-class Backfill(Stage):
+class Backfill(_KeyedWindowStage):
     """Sliding-window backfill: fill nulls (or a sentinel) with the most
     recent non-null value within ``lookback`` prior rows (None =
     unbounded). ``last(x, ignorenulls=True)`` over a bounded frame — the
@@ -183,22 +211,24 @@ class Backfill(Stage):
                  key: str = DEFAULT_KEY, order: Sequence[str] = DEFAULT_ORDER,
                  suffix: str = "_filled"):
         self.cols = [cols] if isinstance(cols, str) else list(cols)
-        super().__init__(f"backfill({','.join(self.cols)})")
+        super().__init__(f"backfill({','.join(self.cols)})", key, order)
         self.frame = FrameSpec(lookback=lookback, include_current=include_current)
         self.sentinel = sentinel
-        self.key, self.order, self.suffix = key, order, suffix
+        self.suffix = suffix
+        self.outputs = [f"{c}{suffix}" for c in self.cols]
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def layers(self) -> Layers:
         w = self.frame.over(self.key, self.order)
+        cols = {}
         for c in self.cols:
             v = F.col(c)
             if self.sentinel is not None:
                 v = F.when(v != F.lit(self.sentinel), v)  # sentinel → null
-            df = df.withColumn(f"{c}{self.suffix}", F.last(v, ignorenulls=True).over(w))
-        return df
+            cols[f"{c}{self.suffix}"] = F.last(v, ignorenulls=True).over(w)
+        return [cols]
 
 
-class RollingAgg(Stage):
+class RollingAgg(_KeyedWindowStage):
     """Rolling aggregate over the last ``lookback`` rows (strictly past by
     default — set ``include_current=True`` to include the current row).
 
@@ -209,16 +239,14 @@ class RollingAgg(Stage):
     def __init__(self, aggs: dict[str, tuple], lookback: int | None,
                  include_current: bool = False, key: str = DEFAULT_KEY,
                  order: Sequence[str] = DEFAULT_ORDER):
-        super().__init__(f"rolling({','.join(aggs)})")
+        super().__init__(f"rolling({','.join(aggs)})", key, order)
         self.aggs = aggs
         self.frame = FrameSpec(lookback=lookback, include_current=include_current)
-        self.key, self.order = key, order
+        self.outputs = list(aggs)
 
-    def apply(self, df: DataFrame) -> DataFrame:
+    def layers(self) -> Layers:
         w = self.frame.over(self.key, self.order)
-        for out, (fn, col) in self.aggs.items():
-            df = df.withColumn(out, fn(col).over(w))
-        return df
+        return [{out: fn(col).over(w) for out, (fn, col) in self.aggs.items()}]
 
 
 class BucketedRollingAgg(Stage):

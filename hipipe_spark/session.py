@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """About half of the host's RAM (``MemTotal`` in ``/proc/meminfo``):
+    room for the JVM heap, its off-heap buffers and the Python workers.
+    ``4g`` where ``/proc/meminfo`` is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2 // 1024}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "hipipe_spark",
     cores: int | None = None,
@@ -24,7 +38,8 @@ def get_spark(
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``. Shuffle
     partitions default to the core count — on a real cluster you would
     size this to ~2-3x total executor cores; AQE coalesces at runtime
-    either way.
+    either way. Driver memory defaults to
+    :func:`_default_driver_memory`; ``$SPARK_DRIVER_MEM`` overrides it.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -43,7 +58,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -1,15 +1,20 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hipipe_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
 def spark():
-    return get_spark(app_name="hipipe_spark_tests", cores=8,
+    # shuffle_partitions stays 8 whatever the core count, so the plans
+    # match the ones tests/plan_budgets.json was recorded from
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS")
+                or len(os.sched_getaffinity(0)))
+    return get_spark(app_name="hipipe_spark_tests", cores=cores,
                      shuffle_partitions=8)
 
 

@@ -7,8 +7,10 @@ so two operators lost their driver queries without any error). Pure
 AST checks — no Spark session."""
 
 import ast
+import os
 
-ENTRY = "/root/repo/__spark_entry__.py"
+ENTRY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "__spark_entry__.py")
 
 
 def _tree():
@@ -47,8 +49,6 @@ def test_no_shadowed_query_functions():
 def test_every_query_has_oracle_or_is_disclosed():
     """Each queries() key must have an oracle_sql() entry unless it is
     on the explicit rows-only-by-construction list."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
     rows_only = {"bpe_merges", "embedding_ivf_topk",
                  "embedding_pca", "media_features",

@@ -5,7 +5,7 @@ import numpy as np
 import pandas as pd
 
 from hipipe_spark.operators.temporal import (
-    Calendar, Ewma, LagLead, RollingAgg, Sessionize, TimeSincePrev,
+    Backfill, Calendar, Ewma, LagLead, RollingAgg, Sessionize, TimeSincePrev,
 )
 from hipipe_spark.plans.pipeline import Pipeline
 
@@ -35,6 +35,33 @@ def test_composed_pipeline_adds_no_exchange(spark, transcripts):
     cols = set(out.columns)
     assert "turn_idx_ewma" in cols
     assert {"hour_sin", "dow_cos", "is_weekend"} <= cols
+
+
+def test_fused_window_stages_match_one_by_one(transcripts):
+    """A Pipeline fuses independent window stages into one projection per
+    layer. A stage that reads an earlier stage's output, or rewrites a
+    column an earlier stage read, starts a new fused run. Either way the
+    output equals the stages applied one by one."""
+    stages = [
+        Sessionize(gap="30 minutes"),
+        TimeSincePrev(),
+        # rewrites `ts` (to the previous turn's), which both stages above
+        # read in their second layer
+        RollingAgg({"ts": (F.min, F.col("ts"))}, lookback=1,
+                   include_current=True),
+        LagLead("session_seq", lags=[1]),  # reads Sessionize's output
+        Backfill("tool", sentinel="", suffix=""),  # rewrites `tool` in place
+        LagLead("tool", lags=[1]),  # reads the rewritten `tool`
+        RollingAgg({"n_roles_10": (F.count, F.col("role"))}, lookback=10),
+    ]
+    fused = Pipeline(stages)(transcripts)
+    one_by_one = transcripts
+    for stage in stages:
+        one_by_one = stage(one_by_one)
+    assert fused.dtypes == one_by_one.dtypes
+    assert fused.exceptAll(one_by_one).count() == 0
+    assert one_by_one.exceptAll(fused).count() == 0
+    assert fused.filter(F.col("tool") == "").count() == 0
 
 
 def test_ewma_stage_past_only(spark):

@@ -1,7 +1,12 @@
 """Temporal operators vs the single-node pandas oracle (reference_impl),
 including the hot-conversation skew fixture and stable tie ordering."""
 
+import datetime as dt
+from collections import Counter
+from contextlib import contextmanager
+
 import pytest
+from pyspark.sql import functions as F
 
 from hipipe_spark import reference_impl as ri
 from hipipe_spark.operators.flagship import featurize
@@ -106,3 +111,116 @@ def test_framespec_rejects_future():
     # strictly-past default ends at -1
     assert FrameSpec(lookback=10).end == -1
     assert FrameSpec(lookback=10, include_current=True).end == 0
+
+
+def _executed_ops(df) -> Counter:
+    """Operator counts of ``df``'s executed plan: AQE's final plan, read
+    through its query stages; a cached input counts as one scan. A
+    shuffle is counted with its partitioning."""
+    df.collect()
+    ops, todo = Counter(), [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        if name == "ShuffleExchangeExec":
+            name += ":" + node.outputPartitioning().getClass().getSimpleName()
+        ops[name] += 1
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return ops
+
+
+def test_flagship_plan_shape(spark, transcripts_pdf, profiles_pdf):
+    """The union as-of runs first and its conv_id exchange and sort serve
+    every temporal window, which fuse into two window passes."""
+    # local inputs: the plan holds no generator lineage, cached or not
+    transcripts = spark.createDataFrame(transcripts_pdf)
+    profiles = spark.createDataFrame(profiles_pdf)
+    ops = _executed_ops(featurize(transcripts, profiles, asof_strategy="union"))
+    assert ops["ShuffleExchangeExec:HashPartitioning"] == 1, ops
+    assert sum(v for k, v in ops.items() if k.startswith("ShuffleExchangeExec")) == 1, ops
+    assert ops["SortExec"] == 1, ops
+    assert ops["WindowExec"] <= 3, ops
+    ops = _executed_ops(featurize(transcripts))
+    assert ops["ShuffleExchangeExec:HashPartitioning"] == 1, ops
+    assert ops["SortExec"] == 1, ops
+    assert ops["WindowExec"] <= 2, ops
+
+
+def _edge_case_frames(spark):
+    """Turns and profile updates built around the as-of edge cases."""
+    base = dt.datetime(2024, 1, 1)
+
+    def at(sec):
+        return base + dt.timedelta(seconds=sec)
+
+    turns = spark.createDataFrame([
+        ("c1", 0, "user", "hi", "", at(50)),
+        ("c1", 1, "assistant", "hello", "search", at(100)),
+        ("c1", 2, "user", "and then?", "", at(100)),  # duplicate ts
+        ("c1", 3, "assistant", "done", "", at(4000)),
+        ("c2", 0, "user", "x", "", at(10)),
+        ("c2", 1, "assistant", "yz", "calc", at(10)),  # duplicate ts
+    ], "conv_id string, turn_idx int, role string, text string, "
+       "tool string, ts timestamp")
+    profiles = spark.createDataFrame([
+        ("c1", at(0), "m0", 0.1),     # before c1's first turn
+        ("c1", at(100), "m1", 0.2),   # exactly at c1's turns 1 and 2
+        ("c1", at(5000), "m2", 0.3),  # after c1's last turn
+        ("c2", at(20), "m3", 0.4),    # after every c2 turn
+        ("c3", at(0), "m4", 0.5),     # a conversation with no turns
+    ], "conv_id string, ts timestamp, model string, temperature double")
+    return turns, profiles
+
+
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup", "bucketed"])
+def test_flagship_asof_edge_cases(spark, strategy):
+    turns, profiles = _edge_case_frames(spark)
+    got = featurize(turns, profiles, asof_strategy=strategy).toPandas()
+    want = ri.featurize(turns.toPandas(), profiles.toPandas())
+    assert ri.allclose_frames(got, want, FEATURE_COLS + ["model_asof", "temperature_asof"])
+    got = got.sort_values(["conv_id", "turn_idx"])
+    assert got.model_asof.fillna("-").tolist() == ["m0", "m1", "m1", "m1", "-", "-"]
+
+
+def _frame_hash(df) -> tuple:
+    h = F.pmod(F.xxhash64(*df.columns), F.lit(1_000_000_007))
+    row = df.select(F.count(F.lit(1)).alias("n"), F.sum(h).alias("chk")).collect()[0]
+    return df.dtypes, row.n, row.chk
+
+
+@contextmanager
+def _spark_conf(spark, conf: dict):
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+@pytest.fixture(scope="module")
+def default_featurize_hash(transcripts, profiles):
+    return _frame_hash(featurize(transcripts, profiles))
+
+
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "cogroup"])
+@pytest.mark.parametrize("partitions", [1, 8])
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_flagship_config_matrix(spark, transcripts, profiles,
+                                default_featurize_hash, aqe, partitions, strategy):
+    """Plan-changing settings never change the output: columns, types and
+    every value hash the same as under the session defaults."""
+    conf = {"spark.sql.adaptive.enabled": aqe,
+            "spark.sql.shuffle.partitions": str(partitions)}
+    with _spark_conf(spark, conf):
+        got = _frame_hash(featurize(transcripts, profiles, asof_strategy=strategy))
+    assert got == default_featurize_hash
